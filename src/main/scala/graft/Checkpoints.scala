@@ -57,6 +57,11 @@ object Checkpoints {
 
   private val ledger = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
 
+  /** The innermost open [[scope]] of the calling thread, if any. */
+  private val openScope = new ThreadLocal[Option[scala.collection.mutable.Buffer[RDD[_]]]] {
+    override def initialValue() = None
+  }
+
   /** The checkpointed RDD backing a just-checkpointed Dataset (its
     * analyzed plan is the LogicalRDD leaf `localCheckpoint` produced).
     */
@@ -67,12 +72,40 @@ object Checkpoints {
     }
 
   /** `df.localCheckpoint(eager)` + ledger registration. Drop-in
-    * replacement for every raw `localCheckpoint` in the engine.
+    * replacement for every raw `localCheckpoint` in the engine. Inside a
+    * [[scope]] on the calling thread the scope holds the checkpoint
+    * instead of the session-global ledger.
     */
   def cp(df: DataFrame, eager: Boolean = true): DataFrame = {
     val out = df.localCheckpoint(eager)
-    rddOf(out).foreach(ledger.add)
+    rddOf(out).foreach { r =>
+      openScope.get match {
+        case Some(held) => held += r
+        case None => ledger.add(r)
+      }
+    }
     out
+  }
+
+  /** Run `body` and free every checkpoint [[cp]] took on this thread
+    * while it ran — operators' internal ones included — when it returns
+    * or throws. The unit of work is one streaming micro-batch (load,
+    * ingest, commit): its checkpoints live exactly as long as the commit,
+    * so a long-running stream holds no blocks for the files it already
+    * drained. Held by the scope, not the global ledger, so a runner's
+    * [[release]] cannot destroy an in-flight batch's only copy (the
+    * [[cpScoped]] rationale). `body` must not return a frame that reads a
+    * checkpoint taken inside it. Scopes nest; each frees its own.
+    */
+  def scope[T](body: => T): T = {
+    val outer = openScope.get
+    val mine = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    openScope.set(Some(mine))
+    try body
+    finally {
+      openScope.set(outer)
+      mine.foreach(r => BlockRelease.unpersist(r.sparkContext, r.id, blocking = false))
+    }
   }
 
   /** Free the blocks behind a checkpointed DataFrame that no live plan

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType}
 
 /** graft.functions — the engine's scalar-function library.
   *
@@ -108,13 +108,14 @@ package object functions {
     * token is kept (the except branch). Type-stable as STRING: ISO date
     * when parseable, raw input otherwise — byte-identical to the golden
     * workbooks in /root/reference/pdf_to_xlsx_files*.
+    * Every step returns null on failure under ANSI mode too (`try_`
+    * forms), so the answer does not depend on the session dialect.
     */
   def statement_date(c: Column): Column = {
     val parts = split(lower(trim(c)), "-")
-    val d = to_date(
-      concat_ws("-", element_at(parts, 1), initcap(element_at(parts, 2)),
-        element_at(parts, 3)),
-      "d-MMM-yyyy")
+    def part(i: Int) = try_element_at(parts, lit(i))
+    val d = try_to_timestamp(concat_ws("-", part(1), initcap(part(2)), part(3)),
+      lit("d-MMM-yyyy")).cast(DateType)
     when(d.isNotNull, d.cast(StringType)).otherwise(c)
   }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.{functions => gf}
+import graft.Checkpoints.TrackedCheckpointOps
 import graft.operators.Relational
 import graft.sources.XlsxSource
 import org.apache.spark.sql.expressions.Window
@@ -25,7 +26,7 @@ case class Warehouse(
     price: DataFrame)       // id_product, price, offer_price, start_date, end_date
 
 /** Pipeline 2 of the reference (`import_files_to_postgre.py`, SURVEY.md
-  * §3.2) re-expressed as ONE lazy set-oriented plan per batch of workbook
+  * §3.2) re-expressed as ONE set-oriented plan per batch of workbook
   * files — where the reference runs ≥5 SQL round-trips per row
   * (`import_files_to_postgre.py:145-227`), this runs a fixed number of
   * joins per BATCH regardless of row count.
@@ -41,22 +42,38 @@ case class Warehouse(
   *    possibly-empty Liga AFTER use, so a blank inherits only from the
   *    immediately-previous row — see SURVEY.md §7.3)
   *  - get_or_create store/provider (`database_utils.py:57-113`) → dim
-  *    anti-join + surrogate assignment (J4); the provider-liveness HEAD
-  *    probe (`verify_url`, `utils_tools.py:92-108`) is a side-effecting
-  *    call that must NOT live in a query plan — is_active defaults TRUE
-  *    here and a separate quarantined enrichment stage may update it
+  *    anti-joins (J4); the provider-liveness HEAD probe (`verify_url`,
+  *    `utils_tools.py:92-108`) is a side-effecting call that must NOT
+  *    live in a query plan — is_active defaults TRUE here and a separate
+  *    quarantined enrichment stage may update it
   *  - create_product + operation/purchase match (`database_utils.py:
-  *    115-173`) → product dim upsert + exact-duplicate anti-join gate (J5)
-  *  - insert_purchase/insert_operations (`:175-245`) → fact appends with
-  *    deterministic surrogate ids
+  *    115-173`) → product dim anti-join + exact-duplicate anti-join gate
+  *    (J5)
+  *  - every sequence nextval (stores, providers, products, purchases) →
+  *    ONE ranked pass over the batch's new rows
+  *  - insert_purchase/insert_operations (`:175-245`) → fact appends
   *  - insert_price SCD upsert (`:260-280`) → [[scdMerge]]
   *
-  * Surrogate ids are `max(existing) + row_number` over (file, rownum) —
-  * deterministic, matching the reference's sequence order. The global
-  * window is a single-partition sort of the BATCH (not the warehouse);
-  * batches are file-bounded so this stays small. At 100 TB-scale backfills
-  * switch the id window to per-file partitions + per-file offsets
-  * (count-prefix-sum) — same determinism, no global sort.
+  * Materialisations per call — the only points where the workbook, the
+  * joins or the sort run; every later action reads one of them:
+  *  1. the conformed Precios sheet (W3 pictures, J1 brand/category, the
+  *     price rows);
+  *  2. the resolvable Compras rows, after W3, J1, W1 and store
+  *     resolution;
+  *  3. one aggregate collecting the four existing max ids;
+  *  4. the ranked union of new stores, new providers, new products and
+  *     surviving fact rows ([[Relational.withStratumRankN]], stratum =
+  *     row kind, order = (`_file`, `_rownum`)): each new row's id is its
+  *     table's max + its rank, deterministic and in the reference's
+  *     sequence order. Range-partitioned, so no single-task sort even
+  *     for a backfill; only the |kinds|×P offset table is collected;
+  *  5. the purchase rows with their dim ids, read by the purchase,
+  *     operation and price writes.
+  * The dims are derived from (4), so no write re-parses a workbook.
+  * Every checkpoint goes through [[graft.Checkpoints.cp]]: on the
+  * session ledger for a caller-run batch, or held by the micro-batch's
+  * [[graft.Checkpoints.scope]] and freed once its commit returns
+  * ([[graft.streaming.IngestStream]]).
   */
 object Ingestion {
 
@@ -94,18 +111,19 @@ object Ingestion {
                       existing: Warehouse): Warehouse = {
     val batchDate = current_date() // CURRENT_DATE of the SCD merge
 
-    // ---- scan (S2/S3): values + hyperlinks in one parse per sheet ----
-    val compras0 = XlsxSource.read(spark, path, "Compras")
-    val precios0 = XlsxSource.read(spark, path, "Precios", hyperlinkCols = Seq("Preview"))
-
-    // ---- conform (deep_clean_data, `import_files_to_postgre.py:120-132`)
-    val compras = conform(compras0,
+    // ---- scan (S2/S3): values + hyperlinks in one parse per sheet, then
+    // conform (deep_clean_data, `import_files_to_postgre.py:120-132`)
+    val compras = conform(XlsxSource.read(spark, path, "Compras"),
       numeric = Seq("Cant", "Precio", "% Desc", "C. Unit US", "C. Unit", "Total Cmpr",
         "Envio", "Dólar", "Desct", "Pzs", "Costo Final"),
       dates = Seq("Fch Cmpr"))
-    val precios = conform(precios0,
-      numeric = Seq("P. Tienda", "C. Unit", "P. Venta", "P. Oferta"),
-      dates = Seq.empty)
+    val precios = conform(
+        XlsxSource.read(spark, path, "Precios", hyperlinkCols = Seq("Preview")),
+        numeric = Seq("P. Tienda", "C. Unit", "P. Venta", "P. Oferta"),
+        dates = Seq.empty)
+      .select(Seq("_file", "_rownum", "_hyperlink_Preview", "Descripción", "Marca",
+        "Categoria", "P. Venta", "P. Oferta").map(qcol): _*)
+      .trackedCheckpoint() // materialisation 1: W3, J1 and prices read it
 
     // ---- W3 positional zip (`:261`): Precios!Preview hyperlink list
     // aligned to Compras rows by position within the same file. A Preview
@@ -133,50 +151,41 @@ object Ingestion {
     val rows = enriched.withColumn("str_link",
       when(truthy(liga), liga).otherwise(lag(liga, 1).over(wFile)))
 
-    // ---- store resolution (C7/C9, `database_utils.py:57-83`) ----
-    val withStore = rows
+    // ---- store resolution (C7/C9, `database_utils.py:57-83`); F4: an
+    // unresolvable store → the row contributes nothing (`:60-65`)
+    val resolvable = rows
       .withColumn("store_name", gf.store_name(col("str_link")))
       .withColumn("store_url", gf.domain_store(col("str_link")))
       .withColumn("provider_url", gf.provider_url(col("str_link")))
-    // F4: unresolvable store → row contributes nothing (`:60-65`)
-    val resolvable = withStore
       .filter(col("store_name").isNotNull && col("store_name") =!= "none")
+      .select((Seq("_file", "_rownum", "store_name", "store_url", "provider_url",
+        "Picture_URL", "Marca", "Categoria") ++ factCols).map(qcol): _*)
+      .trackedCheckpoint() // materialisation 2: every later stage reads it
 
-    // ---- store dim upsert (J4/M1): first occurrence wins store_url ----
+    // ---- store dim (J4/M1): first occurrence wins store_url ----
     val newStores = Relational.firstPerKey(
       resolvable.select(col("store_name"), col("store_url"), col("_file"), col("_rownum")),
       keys = Seq(col("store_name")), orderBy = Seq(col("_file"), col("_rownum")))
       .join(existing.store.select("store_name"), Seq("store_name"), "left_anti")
-      .withColumn("status", lit(true))
-    val store = existing.store.unionByName(
-      assignIds(newStores, "id_store", maxId(existing.store, "id_store"),
-        Seq(col("_file"), col("_rownum")))
-        .select("id_store", "store_name", "store_url", "status"))
 
-    // ---- provider dim upsert (J4/M2): key (id_store, provider_url);
-    // is_active would come from the quarantined URL-liveness stage (C10)
-    val withIds = resolvable.join(broadcast(store.select("id_store", "store_name")),
-      Seq("store_name"))
+    // ---- provider dim (J4/M2): key (store, provider_url), the store by
+    // name — store_name ↔ id_store is 1:1 in the store dim, so this needs
+    // no new store's id. is_active would come from the quarantined
+    // URL-liveness stage (C10). A null provider_url (a bare "ML" link)
+    // never anti-joins away: it creates its provider row every batch.
     val newProviders = Relational.firstPerKey(
-      withIds.select(col("id_store"), col("provider_url"), col("_file"), col("_rownum")),
-      keys = Seq(col("id_store"), col("provider_url")),
+      resolvable.select(col("store_name"), col("provider_url"), col("_file"), col("_rownum")),
+      keys = Seq(col("store_name"), col("provider_url")),
       orderBy = Seq(col("_file"), col("_rownum")))
-      .join(existing.provider.select("id_store", "provider_url"),
-        Seq("id_store", "provider_url"), "left_anti")
-      .withColumn("is_active", lit(true))
-    val provider = existing.provider.unionByName(
-      assignIds(newProviders, "id_provider", maxId(existing.provider, "id_provider"),
-        Seq(col("_file"), col("_rownum")))
-        .select("id_provider", "id_store", "provider_url", "is_active"))
-
-    val withProvider = withIds.join(
-      broadcast(provider.select("id_provider", "id_store", "provider_url")),
-      Seq("id_store", "provider_url"))
+      .join(existing.provider.join(existing.store.select("id_store", "store_name"), "id_store")
+        .select("store_name", "provider_url"), Seq("store_name", "provider_url"), "left_anti")
 
     // ---- F2/F3 fact filters (`import_files_to_postgre.py:162-172`);
-    // NB dims above intentionally saw canceled rows too — the reference
-    // creates store/provider BEFORE these skips
-    val facts0 = withProvider
+    // NB the dims above intentionally saw canceled rows too — the
+    // reference creates store/provider BEFORE these skips. A row without
+    // a provider_url has no provider to join and never becomes a fact.
+    val facts0 = resolvable
+      .filter(col("provider_url").isNotNull)
       .filter(!(qcol("Fch Entrga").isNotNull && qcol("Fch Entrga").contains("CANCELED")))
       .filter(qcol("Descripción").isNotNull && trim(qcol("Descripción")) =!= "")
 
@@ -198,9 +207,10 @@ object Ingestion {
     val facts = Relational.firstPerKey(keyed, dedupKey.map(col),
         Seq(col("_file"), col("_rownum")))
       .join(existingCombos, dedupKey, "left_anti")
+      .drop("quantity_k", "unit_price_k", "purchase_date_k")
 
-    // ---- product dim upsert (M2): conditional brand/category columns →
-    // one nullable schema (`database_utils.py:149-171`)
+    // ---- product dim (M2): conditional brand/category columns → one
+    // nullable schema (`database_utils.py:149-171`)
     val newProducts = Relational.firstPerKey(
       facts.select(qcol("Descripción").as("product_name"),
         col("Picture_URL").as("image_url"),
@@ -209,22 +219,52 @@ object Ingestion {
         col("_file"), col("_rownum")),
       keys = Seq(col("product_name")), orderBy = Seq(col("_file"), col("_rownum")))
       .join(existing.product.select("product_name"), Seq("product_name"), "left_anti")
-      .withColumn("description", lit("")) // create_product is called with descr=""
-    val product = existing.product.unionByName(
-      assignIds(newProducts, "id_product", maxId(existing.product, "id_product"),
-        Seq(col("_file"), col("_rownum")))
-        .select("id_product", "product_name", "description", "image_url", "brand", "category"))
 
-    val withProduct = facts.join(
-      broadcast(product.select(col("id_product"), col("product_name").as("Descripción"))),
-      Seq("Descripción"))
+    // ---- surrogate ids: one ranked pass for every new row; id = the
+    // table's max + rank over (_file, _rownum) — the reference's
+    // sequence order. Materialisations 3 (one collect of four longs) and
+    // 4 (the ranked union, checkpointed inside withStratumRankN).
+    val maxIds = existingMaxIds(existing)
+    val ranked = Relational.withStratumRankN(
+        Seq(StoreRow -> newStores, ProviderRow -> newProviders, ProductRow -> newProducts,
+            FactRow -> facts.drop("Picture_URL", "Marca", "Categoria"))
+          .map { case (kind, df) => df.withColumn("__kind", lit(kind)) }
+          .reduce(_.unionByName(_, allowMissingColumns = true)),
+        stratum = Seq("__kind"), order = Seq(col("_file"), col("_rownum")),
+        as = "__rank", nAs = "__n")
+      .withColumn("__id", col("__rank") + maxIds.foldLeft(lit(0L)) {
+        case (acc, (kind, maxId)) => when(col("__kind") === kind, lit(maxId)).otherwise(acc)
+      })
+    def newRows(kind: Int) = ranked.filter(col("__kind") === kind)
+
+    val store = existing.store.unionByName(newRows(StoreRow)
+      .select(col("__id").as("id_store"), col("store_name"), col("store_url"),
+        lit(true).as("status")))
+    val storeIds = broadcast(store.select("id_store", "store_name"))
+    val provider = existing.provider.unionByName(newRows(ProviderRow)
+      .join(storeIds, Seq("store_name"))
+      .select(col("__id").as("id_provider"), col("id_store"), col("provider_url"),
+        lit(true).as("is_active")))
+    val product = existing.product.unionByName(newRows(ProductRow)
+      .select(col("__id").as("id_product"), col("product_name"),
+        lit("").as("description"), // create_product is called with descr=""
+        col("image_url"), col("brand"), col("category")))
+
+    // ---- fact rows with their dim ids (materialisation 5) ----
+    val purchaseRows = newRows(FactRow)
+      .join(storeIds, Seq("store_name"))
+      .join(broadcast(provider.select("id_provider", "id_store", "provider_url")),
+        Seq("id_store", "provider_url"))
+      .join(broadcast(product.select(col("id_product"), col("product_name").as("Descripción"))),
+        Seq("Descripción"))
+      .select((Seq(col("__id").as("id_purchase"), col("id_provider"), col("id_product")) ++
+        (Seq("_file", "_rownum") ++ factCols).map(qcol)): _*)
+      .trackedCheckpoint()
 
     // ---- purchase fact (M3, `database_utils.py:175-204`) ----
     val idPayment = existing.paymentType
       .filter(col("payment_type") === "Tarjeta de Crédito")
       .select(col("id_payment_type"))
-    val purchaseRows = assignIds(withProduct, "id_purchase",
-      maxId(existing.purchase, "id_purchase"), Seq(col("_file"), col("_rownum")))
     val purchase = existing.purchase.unionByName(
       purchaseRows
         .crossJoin(broadcast(idPayment)) // constant dim key J3 (`:183`)
@@ -310,14 +350,30 @@ object Ingestion {
       graft.operators.Conform.Contract(
         required = Seq("Descripción"), numeric = numeric, dates = dates))
 
-  private def maxId(df: DataFrame, idCol: String): Long =
-    df.agg(coalesce(max(col(idCol)).cast(LongType), lit(0L))).head().getLong(0)
+  /** Compras columns the fact, operation and price projections read. */
+  private val factCols = Seq("Descripción", "Cant", "C. Unit", "C. Unit US", "% Desc",
+    "Pzs", "Costo Final", "Total Cmpr", "Fch Cmpr", "Fch Entrga", "Dólar", "Envio",
+    "Desct", "Liga")
 
-  // Surrogate-id assignment via the range-partitioned global rank — the
-  // one-task Window.orderBy spelling would single-thread an initial bulk
-  // load of a large dim (see Relational.dimUpsert's note).
-  private def assignIds(df: DataFrame, idCol: String, offset: Long,
-                        orderBy: Seq[Column]): DataFrame =
-    graft.operators.Relational.withGlobalRank(df, orderBy, "__rank")
-      .withColumn(idCol, col("__rank") + offset).drop("__rank")
+  // Row kinds of the ranked id pass: the stratum of each new row.
+  private val StoreRow = 0
+  private val ProviderRow = 1
+  private val ProductRow = 2
+  private val FactRow = 3
+
+  /** Row kind → max id of its table (0 when empty): one aggregate over
+    * store, provider, product and purchase, collected once.
+    */
+  private def existingMaxIds(wh: Warehouse): Map[Int, Long] = {
+    val tables = Seq(StoreRow -> (wh.store, "id_store"),
+      ProviderRow -> (wh.provider, "id_provider"), ProductRow -> (wh.product, "id_product"),
+      FactRow -> (wh.purchase, "id_purchase"))
+    val maxes = tables
+      .map { case (kind, (df, id)) =>
+        df.select(lit(kind).as("__kind"), col(id).cast(LongType).as("__id")) }
+      .reduce(_.unionByName(_))
+      .groupBy("__kind").agg(coalesce(max("__id"), lit(0L)))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    tables.map { case (kind, _) => kind -> maxes.getOrElse(kind, 0L) }.toMap
+  }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import graft.{functions => gf}
 import graft.sources.{PdfParser, XlsxWriter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DateType, DoubleType}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 /** Pipeline 1 of the reference (`pdf_to_xlsx.py`, SURVEY.md §3.1):
@@ -123,14 +123,17 @@ object Statements {
     * sheets msi/compras (`pdf_to_xlsx.py:106-128`). Returns the output
     * path. Single-scalar collect for the name; the sheet writes are the
     * driver-side parity sink (engine-native mode writes parquet twins).
+    * `outDir` is created when it is missing.
     */
   def writeWorkbook(e: Extracted, outDir: String): String = {
     // only rows whose date PARSED feed the max (`pdf_to_xlsx.py:80-86`);
     // statement_date keeps those as ISO strings, raw tokens yield null
+    // (try_cast: under ANSI mode a plain cast would throw on them)
     val maxDate = e.compras
-      .agg(max(to_date(col("`Fecha de la operación`")))).head().getDate(0)
+      .agg(max(col("`Fecha de la operación`").try_cast(DateType))).head().getDate(0)
     val name = new java.text.SimpleDateFormat("ddMMMyyyy", java.util.Locale.ENGLISH)
       .format(maxDate)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val out = s"$outDir/cargos_bbva_$name.xlsx"
     def sheet(df: DataFrame) = df.orderBy("_file", "_rownum")
       .drop("_file", "_rownum")

@@ -10,18 +10,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The swap keeps readers of the OLD paths valid while the new state is
   * being written, which is what lets one micro-batch read the warehouse
   * it is about to replace (streaming ingest, [[graft.streaming.IngestStream]]).
+  *
+  * A loaded table is a plain parquet scan with the declared schema; the
+  * frames [[Ingestion.ingestWorkbooks]] derives from it read the batch's
+  * checkpoints, so the checkpoints must stay live until [[save]] returns
+  * (IngestStream frees them right after).
   */
 object WarehouseStore {
 
   private val tables = Seq("payment_type", "store", "provider", "product",
     "purchase", "operation", "price")
 
+  /** The warehouse at `dir`; a missing table reads as its empty seed.
+    * Each table is read with the schema [[Ingestion.empty]] declares, so
+    * a load runs no parquet schema-inference job.
+    */
   def load(spark: SparkSession, dir: String): Warehouse = {
     val empty = Ingestion.empty(spark)
     def tbl(name: String, fallback: DataFrame): DataFrame = {
       val p = new Path(s"$dir/$name")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(p.toString) else fallback
+      if (fs.exists(p)) spark.read.schema(fallback.schema).parquet(p.toString) else fallback
     }
     Warehouse(
       paymentType = tbl("payment_type", empty.paymentType),

@@ -31,12 +31,14 @@ object FileDrop {
       pathGlob: String = "*")
 
   /** Run the drop-directory pipeline to completion (AvailableNow).
-    * `process` receives one micro-batch (= one file) and its batch id;
-    * a throw routes the batch's files to the quarantine dir.
+    * `process` receives one micro-batch (= one file), its batch id and
+    * the batch's file paths (collected once, here — a caller that works
+    * per file needs no second job for them); a throw routes the batch's
+    * files to the quarantine dir.
     * Returns (processedCount, errorCount) like the reference's main.
     */
   def runAvailableNow(spark: SparkSession, cfg: Config)(
-      process: (DataFrame, Long) => Unit): (Long, Long) = {
+      process: (DataFrame, Long, Seq[String]) => Unit): (Long, Long) = {
     val (ok, err) = (new java.util.concurrent.atomic.AtomicLong,
       new java.util.concurrent.atomic.AtomicLong)
     start(spark, cfg, Trigger.AvailableNow(), ok, err)(process)
@@ -60,7 +62,7 @@ object FileDrop {
     */
   def runLive(spark: SparkSession, cfg: Config,
               interval: String = "100 milliseconds")(
-      process: (DataFrame, Long) => Unit): LiveHandle = {
+      process: (DataFrame, Long, Seq[String]) => Unit): LiveHandle = {
     val (ok, err) = (new java.util.concurrent.atomic.AtomicLong,
       new java.util.concurrent.atomic.AtomicLong)
     LiveHandle(
@@ -71,7 +73,7 @@ object FileDrop {
   private def start(spark: SparkSession, cfg: Config, trigger: Trigger,
                     ok: java.util.concurrent.atomic.AtomicLong,
                     err: java.util.concurrent.atomic.AtomicLong)(
-      process: (DataFrame, Long) => Unit)
+      process: (DataFrame, Long, Seq[String]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val stream = spark.readStream
       .format(cfg.format)
@@ -84,10 +86,12 @@ object FileDrop {
       .trigger(trigger)
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // input_file_name() is URL-encoded; the URI round trip yields the
+        // plain Hadoop path every reader and the moves below take
         val files = batch.select(col("_source_file")).distinct()
-          .collect().map(_.getString(0))
+          .collect().map(r => new Path(new java.net.URI(r.getString(0))).toString).toSeq
         try {
-          process(batch.drop("_source_file"), batchId)
+          process(batch.drop("_source_file"), batchId, files)
           files.foreach(f => moveFile(spark, f, cfg.processedDir))
           ok.addAndGet(files.length.toLong)
         } catch {

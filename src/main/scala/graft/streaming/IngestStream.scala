@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Checkpoints
 import graft.plans.{Ingestion, WarehouseStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
@@ -11,6 +12,14 @@ import org.apache.spark.sql.types._
   * `import_files_to_postgre.py:136-237`) → the [[Ingestion]] plan against
   * the parquet-backed warehouse → stage-and-swap commit
   * ([[WarehouseStore]]) → archive or quarantine the file.
+  *
+  * One micro-batch = load the warehouse (declared schema, no inference
+  * job), one [[Ingestion.ingestWorkbooks]] call (its few checkpoints:
+  * the parsed sheets, one ranked id pass, the fact rows), one save. The
+  * file list comes from [[FileDrop]], which already collected it. The
+  * batch's checkpoints live in a [[Checkpoints.scope]] and are freed as
+  * soon as its save returns (or the batch fails), so a live stream holds
+  * no blocks for the files it has drained.
   *
   * Restart safety: the checkpoint skips committed batches; a batch that
   * half-ran before a crash re-runs and the J5 dedup gate makes the replay
@@ -36,12 +45,12 @@ object IngestStream {
       inputDir = inputDir, format = "binaryFile", schema = binaryFileSchema,
       processedDir = processedDir, errorsDir = errorsDir,
       checkpointDir = checkpointDir, pathGlob = "*.xlsx")
-    FileDrop.runAvailableNow(spark, cfg) { (batch, _) =>
-      val files = batch.select("path").distinct().collect().map(_.getString(0))
+    FileDrop.runAvailableNow(spark, cfg) { (_, _, files) =>
       files.foreach { file =>
-        val wh = WarehouseStore.load(spark, warehouseDir)
-        val next = Ingestion.ingestWorkbooks(spark, file, wh)
-        WarehouseStore.save(spark, next, warehouseDir)
+        Checkpoints.scope {
+          val wh = WarehouseStore.load(spark, warehouseDir)
+          WarehouseStore.save(spark, Ingestion.ingestWorkbooks(spark, file, wh), warehouseDir)
+        }
       }
     }
   }

@@ -29,6 +29,25 @@ class CheckpointSpec extends SparkSpec {
     assert(persistedCount == base, "release drains everything ledgered")
   }
 
+  test("scope holds its thread's checkpoints off the ledger and frees them") {
+    Checkpoints.release()
+    val base = persistedCount
+    val total = Checkpoints.scope {
+      val a = Checkpoints.cp(spark.range(10).toDF("a"))
+      val inner = Checkpoints.scope(Checkpoints.cp(spark.range(5).toDF("b")).count())
+      assert(persistedCount == base + 1, "a nested scope frees only its own")
+      assert(Checkpoints.pending == 0, "scoped checkpoints stay off the ledger")
+      a.count() + inner
+    }
+    assert(total == 15)
+    assert(persistedCount == base, "scope frees every checkpoint taken inside it")
+    intercept[RuntimeException](Checkpoints.scope {
+      Checkpoints.cp(spark.range(10).toDF("c"))
+      throw new RuntimeException("batch failed")
+    })
+    assert(persistedCount == base, "a failing body frees its checkpoints too")
+  }
+
   test("iterative operators free superstep blocks in-loop") {
     Checkpoints.release()
     val base = persistedCount
